@@ -2663,17 +2663,39 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     golden fixtures and lose nothing by sitting past position 50.
     Round 3's gate starved itself by front-loading the stable golden
     queries: round 2's two err rows were fixed but never re-witnessed.
-    Round 5 rotates: r4 spent its window on the 50 never-checked keys,
-    so the keys whose last driver row predates r4 now lead (minus the
-    golden/byte-parity-pinned ones that yield to the 10 new r5 keys and
-    the 2 whose semantics were touched this round).
     """
     return {
-        # (2) never driver-checked — new in r5 (window rule 2); the
-        # newest code leads: raw-HTML extraction family, then the
-        # close-out batch + interleaved family (keys displaced past
-        # slot 50 are pytest-pinned and check_entry-green — allowed
-        # overflow per test_driver_window)
+        # (2) never witnessed: past slot 50 in every recorded
+        # CORRECTNESS_r0N window
+        "link_hits": _q_link_hits,
+        "text_allpairs_cosine": _q_text_allpairs_cosine,
+        "split_leakage_safe": _q_split_leakage_safe,
+        "sample_token_mixture": _q_sample_token_mixture,
+        "ann_recall": _q_ann_recall,
+        "nb_confusion": _q_nb_confusion,
+        "nb_holdout_confusion": _q_nb_holdout_confusion,
+        "dedup_minhash_est": _q_dedup_minhash_est,
+        "sample_temperature": _q_sample_temperature,
+        "multimodal_decode_jpeg": _q_multimodal_decode_jpeg,
+        "corpus_drift": _q_corpus_drift,
+        "corpus_drift_counts": _q_corpus_drift_counts,
+        "charset_profile": _q_charset_profile,
+        "media_cross_codec_pairs": _q_media_cross_codec_pairs,
+        "vocab_overlap_hll": _q_vocab_overlap_hll,
+        "cohort_retention": _q_cohort_retention,
+        "active_users": _q_active_users,
+        "zorder_stats": _q_zorder_stats,
+        "media_dhash": _q_media_dhash,
+        "media_dhash_pairs": _q_media_dhash_pairs,
+        "embed_jl_project": _q_embed_jl_project,
+        "jl_recall": _q_jl_recall,
+        "bpe_merges": _q_bpe_merges,
+        "bpe_token_stats": _q_bpe_token_stats,
+        "bpe_fertility": _q_bpe_fertility,
+        "url_blocklist_flags": _q_url_blocklist,
+        "text_winnow": _q_text_winnow,
+        "boilerplate_site_lines": _q_boilerplate_site_lines,
+        # (4) green in a recorded window, newest code first
         "html_parse_blocks": _q_html_parse_blocks,
         "html_spans": _q_html_spans,
         "html_main_spans": _q_html_main_spans,
@@ -2696,6 +2718,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "layout_reading_order": _q_layout_reading_order,
         "dedup_cluster_sizes": _q_dedup_cluster_sizes,
         "interleaved_spans": _q_interleaved_spans,
+        # ---- correctness-gate window boundary (first 50 keys above) ----
         "interleaved_captions": _q_interleaved_captions,
         "pack_interleaved": _q_pack_interleaved,
         "lm_score_stored": _q_lm_score_stored,
@@ -2724,38 +2747,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "link_components": _q_link_components,
         "link_clustering": _q_link_clustering,
         "link_ppr": _q_link_ppr,
-        "link_hits": _q_link_hits,
-        "text_allpairs_cosine": _q_text_allpairs_cosine,
-        "split_leakage_safe": _q_split_leakage_safe,
-        "sample_token_mixture": _q_sample_token_mixture,
-        "ann_recall": _q_ann_recall,
-        "nb_confusion": _q_nb_confusion,
-        "nb_holdout_confusion": _q_nb_holdout_confusion,
-        "dedup_minhash_est": _q_dedup_minhash_est,
-        "sample_temperature": _q_sample_temperature,
-        "multimodal_decode_jpeg": _q_multimodal_decode_jpeg,
-        "corpus_drift": _q_corpus_drift,
-        "corpus_drift_counts": _q_corpus_drift_counts,
-        "charset_profile": _q_charset_profile,
-        "media_cross_codec_pairs": _q_media_cross_codec_pairs,
-        "vocab_overlap_hll": _q_vocab_overlap_hll,
-        "cohort_retention": _q_cohort_retention,
-        "active_users": _q_active_users,
-        "zorder_stats": _q_zorder_stats,
-        "media_dhash": _q_media_dhash,
-        "media_dhash_pairs": _q_media_dhash_pairs,
-        "embed_jl_project": _q_embed_jl_project,
-        "jl_recall": _q_jl_recall,
-        "bpe_merges": _q_bpe_merges,
-        "bpe_token_stats": _q_bpe_token_stats,
-        "bpe_fertility": _q_bpe_fertility,
-        # (3) r4-green but output semantics / implementation touched in r5
-        # (epoch_shards pos int->bigint; cc_best tie-break re-ranked)
         "epoch_shards": _q_epoch_shards,
         "dedup_corpus_cc_best": _q_dedup_corpus_cc_best,
-        # stale rotation (VERDICT r4 item 3): keys whose last driver row
-        # predates round 4 — re-witnessed this round, golden-pinned ones
-        # yield first (they are separately pinned by pytest fixtures)
         "domain_caps": _q_domain_caps,
         "extract_flagship": _q_extract_flagship,
         "f8_page_range": _q_f8_page_range,
@@ -2789,7 +2782,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_simhash_pairs": _q_dedup_simhash_pairs,
         "url_normalize": _q_url_normalize,
         "url_dedup_groups": _q_url_dedup_groups,
-        "url_blocklist_flags": _q_url_blocklist,
         "dedup_corpus": _q_dedup_corpus,
         "dedup_corpus_cc": _q_dedup_corpus_cc,
         "dedup_embedding_pairs": _q_dedup_embedding_pairs,
@@ -2797,9 +2789,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sim_lsh_buckets": _q_sim_lsh_buckets,
         "sim_bucketed_topk": _q_sim_bucketed_topk,
         "sim_multiprobe_topk": _q_sim_multiprobe_topk,
-        # ---- driver window boundary (first 50 keys above) ----
-        # stale but heavily golden/byte-parity-pinned — yielded their
-        # slots to the rotation above (test_driver_window.py rule 3)
         "j_semi_anti": _q_j_semi_anti,
         "domain_stats": _q_domain_stats,
         "a12_rollup": _q_a12_rollup,
@@ -2810,7 +2799,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "html_block_scores": _q_html_block_scores,
         "text_langid": _q_text_langid,
         "text_fingerprint": _q_text_fingerprint,
-        "text_winnow": _q_text_winnow,
         "c1_classify_golden": _q_classify_golden,
         "p2_samples_golden": _q_samples_golden,
         "h1_headers_golden": _q_headers_golden,
@@ -2818,7 +2806,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "c2_structural_spans": _q_c2_structural_spans,
         "table_grid_cells": _q_table_grid_cells,
         "table_consolidated": _q_table_consolidated,
-        # r4-green keys (fresh driver rows in CORRECTNESS_r04.json)
         "ann_kmeans_centroids": _q_ann_kmeans_centroids,
         "text_embed_vectors": _q_text_embed_vectors,
         "ann_ivf_sampled": _q_ann_ivf_sampled,
@@ -2829,7 +2816,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "vocab_topk": _q_vocab_topk,
         "vocab_coverage": _q_vocab_coverage,
         "boilerplate_lines": _q_boilerplate_lines,
-        "boilerplate_site_lines": _q_boilerplate_site_lines,
         "multimodal_decode_bmp": _q_multimodal_decode_bmp,
         "hist_quantiles": _q_hist_quantiles,
         "dedup_incremental": _q_dedup_incremental,

@@ -165,7 +165,8 @@ PAYLOAD_SEP = "|"
 class ExtractionConfig:
     """Tunable knobs of the distributed pipeline (not domain semantics)."""
 
-    #: target number of partitions for the skew-defusing repartition
+    #: skew-repartition budget for the WHOLE input: a checkpoint wave gets
+    #: its buckets' share, floored at one round of cores, capped at this
     num_partitions: int = 32
     #: docs whose span count exceeds this multiple of the batch median are
     #: isolated into their own tasks (oversized-PDF skew, north_rule)

@@ -58,7 +58,9 @@ def main(argv: list[str] | None = None) -> int:
                          "also skip completed buckets — flag is documentation)")
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--waves", type=int, default=8)
-    ap.add_argument("--num-partitions", type=int, default=None)
+    ap.add_argument("--num-partitions", type=int, default=None,
+                    help="whole-input partition budget (default 32): a wave "
+                         "gets its buckets' share, >= one round of cores")
     ap.add_argument("--allowed-roots", nargs="*", default=None,
                     help="output-path allowlist roots (F9 guard; default: "
                          "repo root + /tmp/)")

@@ -44,7 +44,9 @@ def main(argv: list[str] | None = None) -> int:
                          "skip completed buckets — flag is documentation)")
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--waves", type=int, default=8)
-    ap.add_argument("--num-partitions", type=int, default=None)
+    ap.add_argument("--num-partitions", type=int, default=None,
+                    help="whole-input partition budget (default 32): a wave "
+                         "gets its buckets' share, >= one round of cores")
     ap.add_argument("--allowed-roots", nargs="*", default=None)
     args = ap.parse_args(argv)
     validate_output_path(args.output, args.allowed_roots)

@@ -16,6 +16,9 @@ Scale notes (10^12 docs):
     checkpoint resumes see identical placement;
   * `repartitionByRange` samples the salted key to build balanced range
     bounds — one shuffle, after which the pipeline is narrow to the sink;
+  * ``cfg.num_partitions`` budgets the whole input: a checkpoint wave
+    gets its buckets' share, floored at one round of cores and capped at
+    the budget (``plans.checkpoint.wave_partitions``);
   * `isolate_heavy` additionally gives span-count outliers their own
     partitions (AQE can't split a single huge row, so we pre-route
     them) — the local[8]/local[32] scaling bench uses this on the skew

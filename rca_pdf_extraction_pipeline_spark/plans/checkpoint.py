@@ -15,6 +15,10 @@ Design (scales to 10^12 docs):
     (input path, app id, wall time). The manifest append is the commit
     point: output files without a manifest entry are invisible garbage,
     exactly like Iceberg's snapshot protocol.
+  * ``cfg.num_partitions`` budgets the WHOLE input: a wave gets its
+    buckets' share (:func:`wave_partitions`), floored at one round of
+    cores and capped at the budget — every Python task pays a fixed
+    worker start-up cost, so waves must not multiply the task count.
   * resume = read manifest, skip completed buckets; progress state is
     O(n_buckets), not O(n_docs) — no driver-side doc-id sets. Two input
     modes: ``extract_with_checkpoint`` filters an arbitrary docs frame
@@ -35,8 +39,10 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
+from dataclasses import replace
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -176,32 +182,45 @@ def extract_with_checkpoint(
     :func:`extract_documents`; the raw-HTML job passes
     ``htmlparse.to_spans``).  ``operation`` labels the lineage record.
     """
+    bucket = _bucket_col(n_buckets)
+    return _run_waves(
+        docs.sparkSession,
+        lambda group: docs.filter(bucket.isin([int(b) for b in group])),
+        table_dir, cfg, n_buckets, waves, max_waves, input_desc,
+        transform, operation)
+
+
+def wave_partitions(num_partitions: int, wave_buckets: int, n_buckets: int,
+                    cores: int) -> int:
+    """Partitions of one wave's salted repartition: the wave's bucket
+    share of the whole-input budget ``num_partitions``, floored at one
+    round of ``cores`` and capped at the budget."""
+    share = -(-num_partitions * wave_buckets // n_buckets)
+    return min(num_partitions, max(share, cores))
+
+
+def _run_waves(spark: SparkSession, wave_input, table_dir: str | Path,
+               cfg: ExtractionConfig, n_buckets: int, waves: int,
+               max_waves: int | None, input_desc: str, transform=None,
+               operation: str = "extract_documents") -> dict:
+    """The wave loop both input modes share: plan the todo buckets into
+    waves, run each over ``wave_input(group)`` and report the resume."""
     table_dir = Path(table_dir)
     manifest = SnapshotManifest(table_dir)
     done = manifest.completed_buckets()
     todo = sorted(set(range(n_buckets)) - done)
-    spark = docs.sparkSession
 
     wave_size = max(1, (n_buckets + waves - 1) // waves)
     wave_groups = [todo[i:i + wave_size] for i in range(0, len(todo), wave_size)]
-    if max_waves is not None:
-        wave_groups = wave_groups[:max_waves]
-
-    ran = []
-    bucket = _bucket_col(n_buckets)
-    for group in wave_groups:
-        sub = docs.filter(bucket.isin([int(b) for b in group]))
-        snap = _run_wave(spark, sub, group, table_dir, manifest, cfg,
-                         n_buckets, input_desc, transform=transform,
-                         operation=operation)
-        ran.append(snap)
-
+    ran = [_run_wave(spark, wave_input(group), group, table_dir, manifest,
+                     cfg, n_buckets, input_desc, transform, operation)
+           for group in wave_groups[:max_waves]]
+    completed_now = sum(len(s["completed_buckets"]) for s in ran)
     return {
         "resumed_from": len(done),
         "waves_run": len(ran),
-        "buckets_completed_now": sum(len(s["completed_buckets"]) for s in ran),
-        "buckets_remaining": n_buckets - len(done)
-        - sum(len(s["completed_buckets"]) for s in ran),
+        "buckets_completed_now": completed_now,
+        "buckets_remaining": n_buckets - len(done) - completed_now,
         "snapshots": [s["id"] for s in ran],
     }
 
@@ -209,20 +228,20 @@ def extract_with_checkpoint(
 def _run_wave(spark: SparkSession, sub: DataFrame, group: list[int],
               table_dir: Path, manifest: SnapshotManifest,
               cfg: ExtractionConfig, n_buckets: int,
-              input_desc: str, transform=None,
-              operation: str = "extract_documents") -> dict:
+              input_desc: str, transform, operation: str) -> dict:
     """One checkpoint wave: scrub uncommitted leftovers, extract, write
     bucket-partitioned output, commit the snapshot."""
+    t0 = time.time()
     # scrub leftovers of a crashed earlier attempt: files under an
     # uncommitted bucket partition would double-serve once this wave
     # commits (on object storage: dynamic partition overwrite instead)
     for b in group:
         leftover = table_dir / "data" / f"_bucket={int(b)}"
         if leftover.exists():
-            import shutil
-
             shutil.rmtree(leftover)
-    sub = skew.salted_repartition(sub, cfg)
+    n = wave_partitions(cfg.num_partitions, len(group), n_buckets,
+                        spark.sparkContext.defaultParallelism)
+    sub = skew.salted_repartition(sub, replace(cfg, num_partitions=n))
     out = ((transform or extract_documents)(sub, cfg)
            .withColumn("_bucket", _bucket_col(n_buckets)))
 
@@ -245,7 +264,8 @@ def _run_wave(spark: SparkSession, sub: DataFrame, group: list[int],
     return manifest.append(
         completed_buckets=list(group),
         metrics={"docs": m["docs"], "output_spans": m["rows"],
-                 "logical_bytes": m["bytes"], "buckets": len(group)},
+                 "logical_bytes": m["bytes"], "buckets": len(group),
+                 "partitions": n, "wall_s": round(time.time() - t0, 3)},
         lineage={
             "input": input_desc,
             "app_id": spark.sparkContext.applicationId,
@@ -296,30 +316,10 @@ def extract_with_checkpoint_bucketed(
     per wave, only that wave's input bucket directories are read (file
     pruning), instead of scanning all input and filtering on a computed
     bucket predicate."""
-    table_dir = Path(table_dir)
-    manifest = SnapshotManifest(table_dir)
-    done = manifest.completed_buckets()
-    todo = sorted(set(range(n_buckets)) - done)
-
-    wave_size = max(1, (n_buckets + waves - 1) // waves)
-    wave_groups = [todo[i:i + wave_size] for i in range(0, len(todo), wave_size)]
-    if max_waves is not None:
-        wave_groups = wave_groups[:max_waves]
-
-    ran = []
-    for group in wave_groups:
-        sub = bucketed_input_df(spark, input_dir, group)
-        snap = _run_wave(spark, sub, group, table_dir, manifest, cfg,
-                         n_buckets, input_desc=f"bucketed:{input_dir}")
-        ran.append(snap)
-    return {
-        "resumed_from": len(done),
-        "waves_run": len(ran),
-        "buckets_completed_now": sum(len(s["completed_buckets"]) for s in ran),
-        "buckets_remaining": n_buckets - len(done)
-        - sum(len(s["completed_buckets"]) for s in ran),
-        "snapshots": [s["id"] for s in ran],
-    }
+    return _run_waves(
+        spark, lambda group: bucketed_input_df(spark, input_dir, group),
+        table_dir, cfg, n_buckets, waves, max_waves,
+        input_desc=f"bucketed:{input_dir}")
 
 
 def read_extracted(spark: SparkSession, table_dir: str | Path) -> DataFrame:

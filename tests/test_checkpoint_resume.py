@@ -11,6 +11,8 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from rca_pdf_extraction_pipeline_spark.operators.extraction import (
+    extract_documents)
 from rca_pdf_extraction_pipeline_spark.plans import checkpoint
 from rca_pdf_extraction_pipeline_spark.sources import fixtures
 
@@ -68,15 +70,49 @@ def test_snapshot_lineage_and_metrics(spark, docs, tmp_path):
     assert snaps[1]["parent"] == snaps[0]["id"]
     total_docs = sum(s["metrics"]["docs"] for s in snaps)
     assert total_docs == docs.count()
+    cores = spark.sparkContext.defaultParallelism
     for s in snaps:
         assert s["metrics"]["output_spans"] >= 0
         assert s["metrics"]["logical_bytes"] >= 0
+        # the wave's share of the 32-partition budget, at least one
+        # round of cores, at most the budget
+        share = -(-32 * s["metrics"]["buckets"] // 4)
+        assert s["metrics"]["partitions"] == min(32, max(share, cores))
+        assert s["metrics"]["wall_s"] > 0
         assert s["lineage"]["input"] == "fixtures-v2"
         assert s["lineage"]["operation"] == "extract_documents"
 
     # manifest on disk is valid json with the committed snapshots
     raw = json.loads((table / "_snapshots.json").read_text())
     assert len(raw["snapshots"]) == 2
+
+
+@pytest.mark.parametrize("budget,wave_buckets,n_buckets,cores,want", [
+    (32, 64, 64, 4, 32),   # waves=1: the whole budget, today's plan
+    (32, 8, 64, 4, 4),     # 1 of 8 waves: its share, one round of cores
+    (32, 8, 64, 32, 32),   # same wave on 32 cores: floored at the cores
+    (2, 8, 64, 4, 2),      # a budget below the cores is never exceeded
+    (32, 4, 10, 4, 13),    # 10 buckets in waves of 4, 4, 2: ceil(12.8)
+    (32, 2, 10, 4, 7),     # ... and the short last wave: ceil(6.4)
+    (32, 1, 64, 4, 4),     # a one-bucket last wave keeps the floor
+])
+def test_wave_partitions_sizes_each_wave(budget, wave_buckets, n_buckets,
+                                         cores, want):
+    assert checkpoint.wave_partitions(budget, wave_buckets, n_buckets,
+                                      cores) == want
+
+
+def test_resumed_run_matches_uncheckpointed_pass(spark, docs, tmp_path):
+    """Per-wave partition sizing changes placement only: a crashed and
+    resumed run reads back exactly one uncheckpointed pass's spans."""
+    table = tmp_path / "extracted"
+    checkpoint.extract_with_checkpoint(
+        docs, table, n_buckets=8, waves=4, max_waves=2, input_desc="x")
+    r = checkpoint.extract_with_checkpoint(
+        docs, table, n_buckets=8, waves=4, input_desc="x")
+    assert r["resumed_from"] == 4 and r["buckets_remaining"] == 0
+    got = _spans_key(checkpoint.read_extracted(spark, table).collect())
+    assert got == _spans_key(extract_documents(docs).collect())
 
 
 def test_uncommitted_buckets_invisible(spark, docs, tmp_path):
